@@ -4,7 +4,7 @@ one JSON line the driver records as BENCH_r{N}.json.
 Each query is forced through full execution with the noop sink (so
 column pruning can't short-circuit the work the way ``count()`` would).
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the cores this process may run on).
 """
 
 from __future__ import annotations
@@ -23,10 +23,9 @@ from big_data_2021_spark_streaming_spark.session import get_session
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    spark = get_session("bench", cpus=cpus)
+    spark = get_session("bench")
     specs = all_queries()
 
     # one warmup pass on the cheapest table to absorb JVM/codegen startup
@@ -44,8 +43,10 @@ def main() -> None:
     # and printed in the JSON line (warm_sec / warm_queries) so the
     # shared-frame cost is visible instead of silently untimed
     # (VERDICT r08 item 3); "value" keeps its r02-r08 meaning — the sum
-    # of the per-query timed loop — so round-over-round totals stay
-    # like-for-like.
+    # of the per-query timed loop. Totals are not like-for-like across
+    # a change of the warm set: a builder that moves into or out of it
+    # moves its first-touch cost out of or into "value" (r09 added the
+    # top-k producers, so r09 "value" is not comparable with r08's).
     warm_timings: dict[str, float] = {}
     for warm in (
         "dedup_clusters",

@@ -171,6 +171,18 @@ _REPLANNED_AFTER_GREEN: frozenset[str] = frozenset(
         # and the dup-dense/single/zero-row corpora. Plan change =>
         # regrade (dedup_lsh_recall_exact is already above).
         "dedup_prefix_filter",
+        # literal frames (the states dimension, the RSVP envelope
+        # fixture, the Lloyd centroid array, the PQ codebooks and the
+        # pruning-audit report grid) are now built from Arrow tables as
+        # JVM local relations instead of Python-RDD scans. Same rows
+        # and types, different leaf operator => regrade.
+        "dedup_semantic", "kmeans_clusters", "partition_pruning_audit",
+        "retrieval_mrr_eval", "retrieval_ndcg_eval",
+        "rsvp_decode_failures", "rsvp_faithful_filter", "rsvp_q2_payload",
+        "similarity_ann_recall", "similarity_cluster_purity",
+        "similarity_ivf_pq_topk", "similarity_ivfpq_residual_topk",
+        "similarity_pq_codes", "similarity_pq_reconstruction",
+        "similarity_pq_topk", "similarity_recall_sweep",
     }
 )
 
@@ -202,7 +214,6 @@ _DRIVER_VERIFIED = frozenset(
         "customer_rfm_scores", "customer_value_frontier",
         "daily_click_purchase_recon", "data_quality_report", "date_parts",
         "decontaminate_overlap", "dedup_embedding_nn", "dedup_exact", "dedup_minhash_cardinality",
-        "dedup_semantic",
         "dedup_simhash", "dedup_simhash_hamming", "dedup_simhash_wide",
         "discount_quantity_ols", "discount_tax_independence",
         "disjunctive_part_revenue", "distinct_users_per_type",
@@ -223,7 +234,7 @@ _DRIVER_VERIFIED = frozenset(
         "fuzzy_name_matches", "grouping_sets_revenue",
         "inactive_rich_customers", "join_cardinality_estimate",
         "join_key_skew", "join_strategy_advisor", "json_encode",
-        "k_anonymity_audit", "kmeans_clusters", "l_diversity_audit",
+        "k_anonymity_audit", "l_diversity_audit",
         "lake_clustering_depth", "lake_file_skew_audit",
         "latest_event_per_user", "layout_zorder_stats",
         "lineitem_measures_unpivot", "linkage_fs_weights",
@@ -238,26 +249,24 @@ _DRIVER_VERIFIED = frozenset(
         "order_priority_semijoin", "order_ship_latency_quantiles",
         "order_status_upsert", "orders_aging_buckets",
         "orders_monthly_growth", "orders_priority_mix_shift",
-        "part_profit_by_nation_year", "partition_pruning_audit",
+        "part_profit_by_nation_year",
         "parts_never_in_bulk_orders", "peak_concurrent_sessions",
         "pivot_user_event_values", "pricing_summary", "promo_revenue_ratio",
         "props_map_stats", "q1_filter", "q2_join_enrich",
         "q3_window_collect_set", "range_join_click_purchase", "recent_orders_lateral",
-        "regional_min_cost_supplier", "retrieval_mrr_eval",
-        "retrieval_ndcg_eval", "retrieval_rrf_fusion",
+        "regional_min_cost_supplier",
+        "retrieval_rrf_fusion",
         "returned_item_report", "returnflag_priority_counts",
         "revenue_autocorr", "revenue_by_nation", "rollup_order_status",
-        "rsvp_decode_failures", "rsvp_faithful_filter", "rsvp_q2_payload",
         "running_user_value", "salted_type_totals", "session_window_stats",
-        "shipping_priority_topk", "similarity_ann_recall",
-        "similarity_bq_topk", "similarity_cluster_purity",
+        "shipping_priority_topk",
+        "similarity_bq_topk",
         "similarity_diverse_topk", "similarity_ivf_occupancy",
-        "similarity_ivf_pq_topk", "similarity_ivf_topk",
-        "similarity_ivfpq_residual_topk", "similarity_lsh_signature",
+        "similarity_ivf_topk",
+        "similarity_lsh_signature",
         "similarity_lsh_topk", "similarity_matryoshka_recall",
-        "similarity_pq_codes", "similarity_pq_reconstruction",
-        "similarity_pq_topk", "similarity_range_search",
-        "similarity_recall_sweep", "similarity_sq_quality",
+        "similarity_range_search",
+        "similarity_sq_quality",
         "similarity_sq_topk", "similarity_topk", "sketch_bloom_reduction",
         "sketch_cms_heavy_hitters", "sketch_event_stats",
         "sketch_histogram_quantiles", "sketch_hll_merge", "sketch_hll_users", "sliding_window_stats",

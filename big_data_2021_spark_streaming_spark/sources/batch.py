@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # table -> columns stored as parquet TIMESTAMP(NANOS)
 TABLES: dict[str, tuple[str, ...]] = {
@@ -78,6 +79,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(ts_col, _nanos_to_ts(ts_col))
     _TABLE_MEMO[key] = df
     return df
+
+
+def literal_frame(
+    spark: SparkSession, rows: list[tuple], schema: str
+) -> DataFrame:
+    """Literal rows under a DDL schema, as a JVM local relation.
+
+    ``createDataFrame(<list>)`` plans a Python-RDD scan, which runs
+    Python workers (and starts the Python daemon on first use); an
+    Arrow table plans a ``LocalTableScan``. The table is not built via
+    pandas: that route silently falls back to the Python RDD whenever
+    ``arrow.pyspark.fallback.enabled`` catches a conversion error."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

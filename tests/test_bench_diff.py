@@ -33,6 +33,30 @@ def test_load_full_bench_line(tmp_path):
     assert load_timings(str(f)) == {"q1": 0.5, "q2": 2.0}
 
 
+def test_load_folds_warm_block_under_prefixed_keys(tmp_path):
+    # warmed builders are timed outside "queries"; they must still reach
+    # the gate, and a query timed in both places keeps both entries
+    f = tmp_path / "run.json"
+    f.write_text(
+        json.dumps(
+            {
+                "warm_queries": {"dedup_clusters": 20.0, "q1": 3.0},
+                "queries": {"q1": 0.5},
+                "value": 0.5,
+            }
+        )
+    )
+    assert load_timings(str(f)) == {
+        "q1": 0.5,
+        "warm:dedup_clusters": 20.0,
+        "warm:q1": 3.0,
+    }
+    prev = load_timings(str(f))
+    curr = dict(prev, **{"warm:dedup_clusters": 45.0})
+    regs, _, _ = diff(prev, curr, 2.0, 1.0, set())
+    assert [r[0] for r in regs] == ["warm:dedup_clusters"]
+
+
 def test_load_raw_stdout_with_noise_lines(tmp_path):
     f = tmp_path / "run.log"
     f.write_text(

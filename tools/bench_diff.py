@@ -39,7 +39,8 @@ _PAIR = re.compile(r'"([a-z0-9_]+)":\s*(-?\d+(?:\.\d+)?)')
 
 
 def load_timings(path: str) -> dict[str, float]:
-    """Return {query: seconds} from any accepted bench recording."""
+    """Return {query: seconds} from any accepted bench recording;
+    warm-block timings come back as ``warm:<query>``."""
     text = Path(path).read_text()
     try:
         doc = json.loads(text)
@@ -48,7 +49,12 @@ def load_timings(path: str) -> dict[str, float]:
         line = [ln for ln in text.splitlines() if ln.strip()][-1]
         doc = json.loads(line)
     if isinstance(doc, dict) and isinstance(doc.get("queries"), dict):
-        return {k: float(v) for k, v in doc["queries"].items()}
+        out = {k: float(v) for k, v in doc["queries"].items()}
+        # the shared-frame warm block is timed apart from the loop; its
+        # builders are gated too, under keys that cannot collide
+        warm = doc.get("warm_queries") or {}
+        out.update({f"warm:{k}": float(v) for k, v in warm.items()})
+        return out
     if isinstance(doc, dict) and isinstance(doc.get("tail"), str):
         pairs = _PAIR.findall(doc["tail"])
         # the first regex hit inside a truncated tail may be a partial
